@@ -58,6 +58,58 @@ def skew_metrics(stats: list[dict]) -> dict:
     }
 
 
+def build_run_manifest(
+    result,
+    input_path: str = "",
+    run_id: str | None = None,
+) -> dict:
+    """The run manifest of a pipeline result, every source marked done.
+    Its `sink_rows` come from the result's materialization
+    (`PipelineResult.materialize`), which also runs `source_stats` in its
+    thread pool; publish it only once every output of the run is written."""
+    t0 = time.time()
+    [stats] = result.materialize(lambda: source_stats(result.parsed))
+    return {
+        "run_id": run_id or uuid.uuid4().hex[:12],
+        "input_path": input_path,
+        "created_unix": int(time.time()),
+        "sources": {s["source"]: {**s, "status": "done"} for s in stats},
+        "sink_rows": dict(result.point_rows),
+        "skew": skew_metrics(stats),
+        "manifest_build_sec": round(time.time() - t0, 3),
+    }
+
+
+def manifest_rows(manifest: dict) -> int:
+    """Total input rows over the manifest's sources."""
+    return sum(s["rows"] for s in manifest["sources"].values())
+
+
+def publish_run_manifest(
+    manifest_dir: str, manifest: dict, elapsed_sec: float | None = None
+) -> str:
+    """Atomically write <dir>/manifest_<run_id>.json and return its path.
+    Pass the run's wall time as elapsed_sec to record throughput alongside
+    the skew metrics."""
+    if elapsed_sec is not None:
+        total = manifest_rows(manifest)
+        manifest = {
+            **manifest,
+            "throughput": {
+                "elapsed_sec": round(elapsed_sec, 3),
+                "rows": total,
+                "seq_per_sec": round(total / elapsed_sec, 1) if elapsed_sec > 0 else None,
+            },
+        }
+    os.makedirs(manifest_dir, exist_ok=True)
+    path = os.path.join(manifest_dir, f"manifest_{manifest['run_id']}.json")
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh, indent=2, default=str)
+    os.replace(tmp, path)  # atomic publish: a crash never leaves a partial manifest
+    return path
+
+
 def write_run_manifest(
     spark: SparkSession,
     result,
@@ -66,36 +118,13 @@ def write_run_manifest(
     run_id: str | None = None,
     elapsed_sec: float | None = None,
 ) -> int:
-    """Write <dir>/manifest_<run_id>.json; returns total input rows.
-    Pass the pipeline's wall time as elapsed_sec to record throughput
-    alongside the skew metrics."""
-    os.makedirs(manifest_dir, exist_ok=True)
-    run_id = run_id or uuid.uuid4().hex[:12]
-    t0 = time.time()
-    stats = source_stats(result.parsed)
-    sink_counts = {name: df.count() for name, df in result.sinks.items()}
-    total = sum(s["rows"] for s in stats)
-    manifest = {
-        "run_id": run_id,
-        "input_path": input_path,
-        "created_unix": int(time.time()),
-        "sources": {s["source"]: {**s, "status": "done"} for s in stats},
-        "sink_rows": sink_counts,
-        "skew": skew_metrics(stats),
-        "manifest_build_sec": round(time.time() - t0, 3),
-    }
-    if elapsed_sec is not None:
-        manifest["throughput"] = {
-            "elapsed_sec": round(elapsed_sec, 3),
-            "rows": total,
-            "seq_per_sec": round(total / elapsed_sec, 1) if elapsed_sec > 0 else None,
-        }
-    path = os.path.join(manifest_dir, f"manifest_{run_id}.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=2, default=str)
-    os.replace(tmp, path)  # atomic publish: a crash never leaves a partial manifest
-    return total
+    """Build and publish the run manifest at once; returns total input
+    rows. A run with outputs besides the manifest builds it first and
+    publishes it last (`build_run_manifest`, `publish_run_manifest`), so a
+    crash in between never marks unwritten sources done."""
+    manifest = build_run_manifest(result, input_path=input_path, run_id=run_id)
+    publish_run_manifest(manifest_dir, manifest, elapsed_sec)
+    return manifest_rows(manifest)
 
 
 def completed_sources(manifest_dir: str) -> set[str]:

@@ -26,6 +26,8 @@ branch, on (resource attrs, window, attrs).
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -48,6 +50,17 @@ _OTEL_TYPE_BY_SPARK = {
 }
 
 
+def _otel_type(dt: str, key: str) -> str | None:
+    t = _OTEL_TYPE_BY_SPARK.get(dt.split("(")[0])
+    if t is None:
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "unsupported attribute type %s for key %s — dropped", dt, key
+        )
+    return t
+
+
 def attribute_types(parsed: DataFrame, attrs) -> list[str | None]:
     """Static OTel type per attribute config, from the translated
     expression's Spark type against the parsed schema (one analysis call,
@@ -58,18 +71,41 @@ def attribute_types(parsed: DataFrame, attrs) -> list[str | None]:
     probe = parsed.select(
         *[F.expr(a.value.sql).alias(f"__t{i}") for i, a in enumerate(attrs)]
     )
-    types = []
-    for (_, dt), a in zip(probe.dtypes, attrs):
-        base = dt.split("(")[0]
-        t = _OTEL_TYPE_BY_SPARK.get(base)
-        if t is None:
-            import logging
+    return [_otel_type(dt, a.key) for (_, dt), a in zip(probe.dtypes, attrs)]
 
-            logging.getLogger(__name__).warning(
-                "unsupported attribute type %s for key %s — dropped", dt, a.key
-            )
-        types.append(t)
-    return types
+
+@dataclass(frozen=True)
+class AttributeTypes:
+    """`attribute_types` of every attribute list of one config: the
+    resource attributes and each metric's, by metric name."""
+
+    resource: list[str | None]
+    metrics: dict[str, list[str | None]]
+
+    def by_key(self, cfg: Config) -> tuple[dict[str, str], dict[str, dict[str, str]]]:
+        """(resource key -> OTel type, metric name -> key -> OTel type),
+        unsupported attributes left out."""
+
+        def keyed(attrs, types):
+            return {a.key: t for a, t in zip(attrs, types) if t}
+
+        return keyed(cfg.resource_attributes, self.resource), {
+            m.name: keyed(m.attributes, self.metrics[m.name]) for m in cfg.metrics
+        }
+
+
+def config_attribute_types(parsed: DataFrame, cfg: Config) -> AttributeTypes:
+    """Every attribute expression of `cfg` typed in ONE analysis call."""
+    lists = [cfg.resource_attributes] + [m.attributes for m in cfg.metrics]
+    flat = attribute_types(parsed, [a for attrs in lists for a in attrs])
+    out, i = [], 0
+    for attrs in lists:
+        out.append(flat[i : i + len(attrs)])
+        i += len(attrs)
+    return AttributeTypes(
+        resource=out[0],
+        metrics={m.name: t for m, t in zip(cfg.metrics, out[1:])},
+    )
 
 
 def _duration_str(seconds: float) -> str:
@@ -122,8 +158,11 @@ def aggregate_metric(
     parsed: DataFrame,
     cfg: Config,
     m: MetricsConfig,
+    types: AttributeTypes | None = None,
 ) -> DataFrame:
-    """One metric config -> one sink DataFrame of data points."""
+    """One metric config -> one sink DataFrame of data points. Pass the
+    config's `types` when aggregating several metrics over one input, so
+    the attribute expressions are analysed once rather than per metric."""
     df = parsed
     if m.filter is not None:
         # SQL three-valued logic: NULL filter excludes the row (pinned spec,
@@ -134,8 +173,9 @@ def aggregate_metric(
     # unsupported-typed attributes drop from the set entirely (ToAttribute
     # ok=false, app.go:408-412) — with the supported CEL surface every
     # expression is scalar, so this is a guard, not a hot path
-    res_types = attribute_types(parsed, cfg.resource_attributes)
-    attr_types = attribute_types(parsed, m.attributes)
+    types = types or config_attribute_types(parsed, cfg)
+    res_types = types.resource
+    attr_types = types.metrics[m.name]
     res_pairs = [
         (a.key, f"__res_{i}", res_types[i])
         for i, a in enumerate(cfg.resource_attributes)

@@ -5,21 +5,53 @@ The reference interleaves all metric configs in one pass over rows
 N independent aggregations off ONE cached parse+enrich scan (SURVEY.md §3.1).
 At 100 TB the cached intermediate is the pruned projection (only columns any
 metric references plus payload), serialized columnar in memory-and-disk; each
-branch then does a single shuffle on its own (window, attrs) keys.
+branch shuffles once on its own (window, attrs) keys.
+
+`run_pipeline*` only builds plans. The data points are small, so a run
+with several outputs (manifest, sinks, OTLP) materializes them once,
+like the reference exports each notification's aggregation once
+(app.go:179-241): `PipelineResult.materialize` runs every metric's
+aggregation concurrently, one job per metric, and keeps the result as a
+lineage-truncated local checkpoint. Every later consumer scans those
+blocks, so none of them can re-run an aggregation. A run that only writes
+sinks skips the checkpoint and writes straight from the plans.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .config import Config
-from .operators.aggregate import aggregate_metric
+from .operators.aggregate import AttributeTypes, aggregate_metric, config_attribute_types
 from .operators.enrich import enrich
 from .operators.parse import decode_and_parse
+
+
+def run_concurrently(spark: SparkSession, jobs: list[Callable[[], Any]]) -> list:
+    """Run independent Spark actions from up to 8 driver threads, so the
+    scheduler overlaps their shuffles and I/O instead of leaving cores idle
+    between serial jobs; returns their results in order. Each thread
+    carries the caller's local properties (job group, description,
+    scheduler pool) and session tags."""
+    if len(jobs) <= 1:
+        return [job() for job in jobs]
+    from pyspark.util import inheritable_thread_target
+
+    def carried(job):
+        # one copy of the properties per job: threads must not share it
+        wrap = inheritable_thread_target(spark)
+        return wrap(job) if callable(wrap) else job
+
+    with ThreadPoolExecutor(min(len(jobs), 8)) as ex:
+        futures = [ex.submit(carried(job)) for job in jobs]
+        return [f.result() for f in futures]
 
 
 def sink_dirname(name: str) -> str:
@@ -57,11 +89,44 @@ def sink_dirname(name: str) -> str:
 @dataclass
 class PipelineResult:
     parsed: DataFrame
-    sinks: dict[str, DataFrame]  # metric name -> data-point DataFrame
+    sinks: dict[str, DataFrame]  # metric name -> data-point plan (lazy)
     metric_index: dict[str, int] = field(default_factory=dict)
+    attr_types: AttributeTypes | None = None
+    # set by materialize(): metric name -> checkpointed data points / rows
+    points: dict[str, DataFrame] | None = field(default=None, repr=False)
+    point_rows: dict[str, int] | None = field(default=None, repr=False)
+
+    def materialize(self, *side_jobs: Callable[[], Any]) -> list:
+        """Aggregate every metric once and keep its data points.
+
+        The first call runs each metric's aggregation as one concurrent
+        job that stores the points as a MEMORY_AND_DISK local checkpoint
+        and counts them; later calls reuse the result. `side_jobs` run in
+        the same thread pool; their results are returned in order.
+        """
+        todo = {} if self.points is not None else self.sinks
+
+        def checkpoint(df: DataFrame) -> tuple[DataFrame, int]:
+            # lazy: the count is the action that computes and stores it
+            ck = df.localCheckpoint(False, StorageLevel.MEMORY_AND_DISK)
+            return ck, ck.count()
+
+        out = run_concurrently(
+            self.parsed.sparkSession,
+            [partial(checkpoint, df) for df in todo.values()] + list(side_jobs),
+        )
+        if todo:
+            done = dict(zip(todo, out))
+            self.points = {n: ck for n, (ck, _) in done.items()}
+            self.point_rows = {n: rows for n, (_, rows) in done.items()}
+        return out[len(todo) :]
 
     def unpersist(self) -> None:
         self.parsed.unpersist()
+        for df in (self.points or {}).values():
+            # a local checkpoint is a LogicalRDD over the stored RDD
+            df._jdf.queryExecution().logical().rdd().unpersist(False)
+        self.points = self.point_rows = None
 
 
 def _referenced_columns(cfg: Config) -> set[str]:
@@ -175,12 +240,13 @@ def run_pipeline_parsed(
     elif cache == "disk":
         parsed = parsed.persist(StorageLevel.DISK_ONLY)
 
+    types = config_attribute_types(parsed, cfg)
     sinks: dict[str, DataFrame] = {}
     index: dict[str, int] = {}
     for i, m in enumerate(cfg.metrics):
-        sinks[m.name] = aggregate_metric(parsed, cfg, m)
+        sinks[m.name] = aggregate_metric(parsed, cfg, m, types)
         index[m.name] = i
-    return PipelineResult(parsed=parsed, sinks=sinks, metric_index=index)
+    return PipelineResult(parsed=parsed, sinks=sinks, metric_index=index, attr_types=types)
 
 
 def write_sinks(
@@ -193,22 +259,20 @@ def write_sinks(
     """Per-metric sink writers (reference sink: OTLP export per resource,
     app.go:230-239 — ours is a columnar table per metric config).
 
-    parallel=True submits every sink write from its own thread: the metric
-    branches are independent jobs over the shared persisted projection, so
-    the scheduler overlaps their shuffles/IO instead of leaving cores idle
-    between serial jobs (measured 1.6-1.8x on the 4-sink flagship; the
-    cache lock makes the shared projection materialize exactly once)."""
-    items = list(result.sinks.items())
-    if parallel and len(items) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        def write_one(kv):
-            name, df = kv
-            df.write.format(fmt).mode(mode).save(f"{out_dir}/{sink_dirname(name)}")
-
-        with ThreadPoolExecutor(min(len(items), 8)) as ex:
-            list(ex.map(write_one, items))
-        return
-    for name, df in items:
-        safe = sink_dirname(name)
-        (df.write.format(fmt).mode(mode).save(f"{out_dir}/{safe}"))
+    A materialized result (`PipelineResult.materialize`) writes each sink
+    from its checkpointed data points; otherwise each write runs its
+    metric's aggregation itself, so a run that only writes sinks pays for
+    no separate pass. parallel=True submits every write from its own
+    thread: the metric branches are independent jobs, so the scheduler
+    overlaps their shuffles/IO (measured 1.6-1.8x on the 4-sink flagship;
+    the cache lock makes the shared projection materialize exactly once)."""
+    sinks = result.points if result.points is not None else result.sinks
+    jobs = [
+        partial(df.write.format(fmt).mode(mode).save, f"{out_dir}/{sink_dirname(name)}")
+        for name, df in sinks.items()
+    ]
+    if parallel:
+        run_concurrently(result.parsed.sparkSession, jobs)
+    else:
+        for job in jobs:
+            job()

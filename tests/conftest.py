@@ -35,3 +35,22 @@ def cf_fixture_df(spark):
 
     _, lines = read_cf_log_file(CF_LOG)
     return tokenized_df_from_lines(spark, lines, SOURCE1).cache()
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Without /root/reference, name the tests that fail only for that
+    reason (their failure text names the missing path) on one line, and
+    any other failures on a second, so a run shows whether its failing set
+    is exactly the reference-absent set."""
+    if os.path.isdir(REFERENCE):
+        return
+    stats = terminalreporter.stats
+    failed = stats.get("failed", []) + stats.get("error", [])
+    absent = sorted({r.nodeid for r in failed if REFERENCE in str(r.longrepr)})
+    other = sorted({r.nodeid for r in failed} - set(absent))
+    terminalreporter.write_line(
+        f"{len(absent)} tests fail only because {REFERENCE} is absent: "
+        + (" ".join(absent) or "(none)")
+    )
+    if other:
+        terminalreporter.write_line(f"{len(other)} tests fail for other reasons: {' '.join(other)}")
